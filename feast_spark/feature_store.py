@@ -30,7 +30,7 @@ from feast_spark.inference import (
     update_entities_with_inferred_types,
     update_view_with_inferred_features,
 )
-from feast_spark.online.store import OnlineStore
+from feast_spark.online.store import OnlineStore, encode_entity_key_row
 from feast_spark.operators.asof_join import AsOfJoinSpec, as_of_join
 from feast_spark.operators.dedup import latest_per_key
 from feast_spark.registry import Registry
@@ -107,6 +107,27 @@ def _make_online_store(config: RepoConfig, spark: SparkSession):
         f"unknown online_store_type {kind!r}; "
         "expected parquet|sqlite|redis|dynamodb|datastore"
     )
+
+
+def _check_entity_rows(entity_rows: list[dict]) -> None:
+    """Online request rows must be a non-empty list of dicts sharing
+    one key set (row 0's keys are the response's entity columns);
+    raise naming the first row that differs and the key it differs by."""
+    if not entity_rows:
+        raise ValueError("entity_rows must be a non-empty list")
+    for i, row in enumerate(entity_rows):
+        if not isinstance(row, dict):
+            raise TypeError(f"entity row {i} is not a dict: {row!r}")
+    first = entity_rows[0].keys()
+    for i, row in enumerate(entity_rows[1:], 1):
+        if row.keys() != first:
+            missing = [k for k in first if k not in row]
+            if missing:
+                raise ValueError(f"entity row {i} lacks key {missing[0]!r}")
+            extra = next(k for k in row if k not in first)
+            raise ValueError(
+                f"entity row {i} has key {extra!r}, which entity row 0 lacks"
+            )
 
 
 class RetrievalJob:
@@ -862,13 +883,19 @@ class FeatureStore:
                     seen.add(src_ref)
 
         grouped = self._group_feature_refs(base_refs)
-        req = self.spark.createDataFrame(entity_rows)  # small request batch
-        req = req.withColumn("__req_id", F.monotonically_increasing_id())
-        base = {c: [r[c] for r in entity_rows] for c in entity_rows[0].keys()}
-        result: dict[str, list] = dict(base)
+        _check_entity_rows(entity_rows)
+        result: dict[str, list] = {
+            c: [r[c] for r in entity_rows] for c in entity_rows[0]
+        }
         statuses: dict[str, list[str]] = {}
         for view, feats in grouped:
             join_keys = self._join_keys_for_view(view)
+            for k in join_keys:
+                if k not in entity_rows[0]:
+                    raise ValueError(
+                        f"entity row 0 lacks join key {k!r} of feature "
+                        f"view {view.name!r}"
+                    )
             if isinstance(as_of, dict):
                 if view.name not in as_of:
                     raise ValueError(
@@ -880,12 +907,14 @@ class FeatureStore:
                 kw = {"as_of": as_of[view.name]}
             else:
                 kw = {} if as_of is None else {"as_of": as_of}
-            got = self.online_store.online_read(
-                self.spark, self.config.project, view.name, req, join_keys,
-                feats, **kw,
+            # the request rows already live here: encode their keys in
+            # Python and point-read the store, no Spark job
+            keys = [encode_entity_key_row(r, join_keys) for r in entity_rows]
+            got = self.online_store.online_get(
+                self.spark, self.config.project, view.name,
+                list(dict.fromkeys(keys)), feats, **kw,
             )
-            rows = {r["__req_id"]: r for r in got.collect()}
-            ordered = [rows[i] for i in sorted(rows.keys())]
+            hits = [got.get(k) for k in keys]
             if full_field_statuses:
                 cutoff = None
                 if view.ttl is not None:
@@ -900,25 +929,25 @@ class FeatureStore:
                     )
                     cutoff = ref_now - view.ttl
 
-                def classify(r, f):
-                    if not r["__found"]:
+                def classify(hit, f):
+                    if hit is None:
                         return None, "NOT_FOUND"
-                    if cutoff is not None and r["__event_ts"] < cutoff:
+                    if cutoff is not None and hit["__event_ts"] < cutoff:
                         return None, "OUTSIDE_MAX_AGE"
-                    if r[f] is None:
+                    if hit[f] is None:
                         return None, "NULL_VALUE"
-                    return r[f], "PRESENT"
+                    return hit[f], "PRESENT"
 
                 for f in feats:
-                    pairs = [classify(r, f) for r in ordered]
+                    pairs = [classify(hit, f) for hit in hits]
                     result[f] = [v for v, _ in pairs]
                     statuses[f] = [s for _, s in pairs]
             else:
                 for f in feats:
-                    result[f] = [r[f] if r["__found"] else None for r in ordered]
+                    result[f] = [hit[f] if hit else None for hit in hits]
                     statuses[f] = [
-                        "PRESENT" if (r["__found"] and r[f] is not None) else "NOT_FOUND"
-                        for r in ordered
+                        "PRESENT" if hit and hit[f] is not None else "NOT_FOUND"
+                        for hit in hits
                     ]
         # on-demand transforms over the assembled response (the serving
         # half of OnDemandFeatureView; batch sizes here are request-

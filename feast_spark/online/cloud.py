@@ -35,7 +35,7 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from feast_spark.online.kv import _chunked, _read_via_lookup, _snapshot_rows
+from feast_spark.online.kv import KVOnlineStore, _chunked, _snapshot_rows
 
 # DynamoDB caps BatchGetItem at 100 keys; Datastore transactions at 500
 # mutations (reference datastore.py:DatastoreOnlineStoreConfig
@@ -59,7 +59,7 @@ def _is_conditional_fail(ex: Exception) -> bool:
     return resp.get("Error", {}).get("Code") == "ConditionalCheckFailedException"
 
 
-class DynamoDBOnlineStore:
+class DynamoDBOnlineStore(KVOnlineStore):
     """DynamoDB-backed online store (reference
     infra/online_stores/dynamodb.py).
 
@@ -194,9 +194,6 @@ class DynamoDBOnlineStore:
                     break
         return payloads, schema_json
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
-        return _read_via_lookup(self, *args, **kwargs)
-
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DELETE the project's tables (dynamodb.py:88-101
         _delete_tables_idempotent)."""
@@ -224,7 +221,7 @@ class DynamoDBOnlineStore:
             self._known_tables.discard(name)
 
 
-class DatastoreOnlineStore:
+class DatastoreOnlineStore(KVOnlineStore):
     """Datastore-backed online store (reference
     infra/online_stores/datastore.py).
 
@@ -318,9 +315,6 @@ class DatastoreOnlineStore:
             if row is not None and "payload" in row:
                 payloads.append(row["payload"])
         return payloads, meta["schema_json"]
-
-    def online_read(self, *args, **kwargs) -> DataFrame:
-        return _read_via_lookup(self, *args, **kwargs)
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """Delete all Row children + the table metadata entity

@@ -126,37 +126,83 @@ def _parse_hits(
     return out
 
 
-def _read_via_lookup(
+def _hit_frame(
     store,
     spark: SparkSession,
     project: str,
     view_name: str,
-    entity_rows_df: DataFrame,
-    join_keys: list[str],
+    keys: list[str],
     feature_cols: list[str],
-) -> DataFrame:
-    """Shared multiget: collect the (small by contract) request keys,
-    point-lookup the KV from the driver — the reference's online_read
-    loop (sqlite.py:139-166) — and broadcast the hits back onto the
-    request frame.  The KV is never scanned."""
-    keyed = entity_rows_df.withColumn(_KEY, encode_entity_key(join_keys))
-    keys = [r[0] for r in keyed.select(_KEY).distinct().collect()]
+) -> DataFrame | None:
+    """The ONE point lookup of a KV read — the reference's online_read
+    loop (sqlite.py:139-166) — decoded into a typed LocalRelation of
+    (key, event ts, features), or None when nothing was found."""
     payloads, schema_json = store._lookup(project, view_name, keys)
-    hits = _parse_hits(spark, payloads, schema_json, feature_cols)
-    if hits is None:
-        out = keyed
-        for f in feature_cols:
-            out = out.withColumn(f, F.lit(None))
-        return (
-            out.withColumn("__found", F.lit(False))
-            .withColumn(_EVENT_TS, F.lit(None).cast("timestamp"))
-            .drop(_KEY)
-        )
-    out = keyed.join(F.broadcast(hits), on=_KEY, how="left")
-    return out.withColumn("__found", F.col(_EVENT_TS).isNotNull()).drop(_KEY)
+    return _parse_hits(spark, payloads, schema_json, feature_cols)
 
 
-class SqliteOnlineStore:
+class KVOnlineStore:
+    """Read half shared by the KV backends (SQLite, Redis, DynamoDB,
+    Datastore): each subclass implements ``_lookup(project, view_name,
+    keys) -> (payloads, schema_json)``, and both multigets run it once
+    per read.  KV backends overwrite values in place, so neither read
+    takes ``as_of``."""
+
+    def online_get(
+        self,
+        spark: SparkSession,
+        project: str,
+        view_name: str,
+        keys: list[str],
+        feature_cols: list[str],
+        as_of=None,
+    ) -> dict[str, dict]:
+        """Driver-side multiget (see ``OnlineStore.online_get``): the
+        decode runs on a LocalRelation, so the collect launches no
+        Spark job."""
+        if as_of is not None:
+            raise ValueError(
+                f"{type(self).__name__} overwrites values in place and "
+                "keeps no history: as_of needs the parquet online store"
+            )
+        hits = _hit_frame(self, spark, project, view_name, keys, feature_cols)
+        found: dict[str, dict] = {}
+        for r in [] if hits is None else hits.collect():
+            hit = r.asDict()
+            key = hit.pop(_KEY)
+            if hit[_EVENT_TS] is not None:  # online_read's __found
+                found[key] = hit
+        return found
+
+    def online_read(
+        self,
+        spark: SparkSession,
+        project: str,
+        view_name: str,
+        entity_rows_df: DataFrame,
+        join_keys: list[str],
+        feature_cols: list[str],
+    ) -> DataFrame:
+        """DataFrame multiget: collect the (small by contract) request
+        keys, point-lookup the KV from the driver and broadcast the
+        hits back onto the request frame.  The KV is never scanned."""
+        keyed = entity_rows_df.withColumn(_KEY, encode_entity_key(join_keys))
+        keys = [r[0] for r in keyed.select(_KEY).distinct().collect()]
+        hits = _hit_frame(self, spark, project, view_name, keys, feature_cols)
+        if hits is None:
+            out = keyed
+            for f in feature_cols:
+                out = out.withColumn(f, F.lit(None))
+            return (
+                out.withColumn("__found", F.lit(False))
+                .withColumn(_EVENT_TS, F.lit(None).cast("timestamp"))
+                .drop(_KEY)
+            )
+        out = keyed.join(F.broadcast(hits), on=_KEY, how="left")
+        return out.withColumn("__found", F.col(_EVENT_TS).isNotNull()).drop(_KEY)
+
+
+class SqliteOnlineStore(KVOnlineStore):
     """SQLite-backed online store (reference infra/online_stores/sqlite.py).
 
     One row per entity key per ``{project}_{view}`` table; conditional
@@ -254,9 +300,6 @@ class SqliteOnlineStore:
             )
         return payloads, row[0]
 
-    def online_read(self, *args, **kwargs) -> DataFrame:
-        return _read_via_lookup(self, *args, **kwargs)
-
     def expire(self, spark, project: str, view_name: str, cutoff) -> int:
         """TTL sweep: one indexed DELETE of rows older than ``cutoff``
         (storage reclaim; mirrors OnlineStore.expire).  Returns the
@@ -291,7 +334,7 @@ class SqliteOnlineStore:
                 )
 
 
-class RedisOnlineStore:
+class RedisOnlineStore(KVOnlineStore):
     """Redis-backed online store (reference infra/online_stores/redis.py:
     HSET per entity key under ``{project}:{view}:{entity_key}``, HGET
     multiget).  Takes a redis-py-compatible client (``redis.Redis`` in
@@ -364,9 +407,6 @@ class RedisOnlineStore:
             p.decode() if isinstance(p, bytes) else p for p in found if p is not None
         ]
         return payloads, schema_json
-
-    def online_read(self, *args, **kwargs) -> DataFrame:
-        return _read_via_lookup(self, *args, **kwargs)
 
     def teardown(self, project: str, view_names: list[str] | None = None) -> None:
         """DEL the project's keys (redis.py teardown: delete by

@@ -60,6 +60,41 @@ def encode_entity_key(join_keys: list[str]) -> F.Column:
     return F.concat_ws("|", *parts)
 
 
+def encode_entity_key_row(row: dict, join_keys: list[str]) -> str:
+    """:func:`encode_entity_key` of one driver-side request row, in
+    Python: the same ``k=v`` parts over the sorted join keys, a NULL
+    value's part skipped (``concat`` with NULL is NULL, and
+    ``concat_ws`` drops it), each value spelled the way Spark's
+    ``CAST(v AS STRING)`` spells the type ``createDataFrame`` infers
+    for it.  Raises ``KeyError`` for a missing join key and
+    ``TypeError`` for a value that is not None/bool/int/float/str."""
+    return "|".join(
+        f"{k}={_cast_string(row[k])}"
+        for k in sorted(join_keys)
+        if row[k] is not None
+    )
+
+
+def _cast_string(v) -> str:
+    if isinstance(v, bool):  # before int: bool is an int subclass
+        return "true" if v else "false"
+    if isinstance(v, (int, str)):
+        return str(v)
+    if isinstance(v, float):
+        # Spark casts a double with the JVM's Double.toString, whose
+        # digits differ from Python's repr (JDK 17 prints 5e-324 as
+        # 4.9E-324 and 1e23 as 9.999999999999999E22) and from one JDK
+        # release to the next: ask the running JVM (a py4j call, no
+        # Spark job)
+        from pyspark import SparkContext
+
+        return SparkContext._jvm.java.lang.Double.toString(v)
+    raise TypeError(
+        f"entity key value {v!r} of type {type(v).__name__} is not "
+        "None, bool, int, float or str"
+    )
+
+
 def project_incoming(
     df: DataFrame,
     join_keys: list[str],
@@ -301,6 +336,95 @@ class OnlineStore:
     #: before passing as_of through)
     supports_time_travel = True
 
+    def _snapshot_path(
+        self, project: str, view_name: str, as_of=None
+    ) -> str | None:
+        """The snapshot directory a read of the view serves from, or
+        None when it serves NOT_FOUND rows: head through the manifest,
+        or — with ``as_of`` (datetime, naive = UTC; int commit seq; tag
+        name) — the snapshot that was current then, resolved through
+        the manifest commit log (``io/manifest.path_as_of``).
+        Snapshots older than the ``keep_versions`` GC window raise with
+        the surviving range.  A view NEVER materialized, and seq 0,
+        resolve to None: serving returned NOT_FOUND rows then too."""
+        if as_of is None:
+            return self._current_data_path(project, view_name)
+        if as_of == 0:
+            # seq 0 = "before the first commit" (numbering starts at
+            # 1): the pre-history replay a provenance record pins for a
+            # view that was never materialized when the snapshot was
+            # taken (provenance.NEVER_MATERIALIZED)
+            return None
+        table_dir = self._table_dir(project, view_name)
+        if not self.fs.exists(posixpath.join(table_dir, MANIFEST)):
+            return None
+        return self._mtable(table_dir).path_as_of(as_of)
+
+    def online_get(
+        self,
+        spark: SparkSession,
+        project: str,
+        view_name: str,
+        keys: list[str],
+        feature_cols: list[str],
+        as_of=None,
+    ) -> dict[str, dict]:
+        """Driver-side multiget, the serving path of
+        ``get_online_features``: maps each found encoded entity key
+        (:func:`encode_entity_key_row`) to ``{"__event_ts": ..., feature:
+        value, ...}``; missing keys are absent.  ``as_of`` resolves the
+        snapshot as in :meth:`online_read`, and a feature column the
+        snapshot predates serves None.
+
+        No Spark job: the snapshot's part files are read one at a time
+        through ``self.fs`` with pyarrow and filtered to the requested
+        keys, so driver memory holds one part file plus the hits, and
+        the scan stops once every key is found (a snapshot holds one
+        row per key).  ``__event_ts`` is a naive-UTC datetime; values
+        take the Python types Spark's ``collect()`` gives them."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        path = self._snapshot_path(project, view_name, as_of)
+        wanted = set(keys)
+        found: dict[str, dict] = {}
+        if path is None or not wanted:
+            return found
+        needle = pa.array(list(wanted), pa.string())
+        for name in sorted(self.fs.list_files(path)):
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS, .crc: files Spark's reader skips too
+            part = pq.ParquetFile(
+                pa.BufferReader(self.fs.read_bytes(posixpath.join(path, name))),
+                coerce_int96_timestamp_unit="us",
+            )
+            present = [f for f in feature_cols if f in part.schema_arrow.names]
+            table = part.read(columns=[_KEY, _EVENT_TS, *present])
+            table = table.filter(pc.is_in(table[_KEY], value_set=needle))
+            for i, field in enumerate(table.schema):
+                # a TIMESTAMP_MICROS column reads tz-aware; the cast
+                # keeps its UTC wall clock and drops the zone
+                if pa.types.is_timestamp(field.type) and field.type.tz:
+                    table = table.set_column(
+                        i, field.name, table[i].cast(pa.timestamp("us"))
+                    )
+            schema = from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+            for key, ts, *vals in ArrowTableToRowsConversion.convert(
+                table, schema, return_as_tuples=True
+            ):
+                if ts is None:
+                    continue  # online_read's __found is a non-NULL ts
+                hit = dict.fromkeys(feature_cols)
+                hit.update(zip(present, vals))
+                hit[_EVENT_TS] = ts
+                found[key] = hit
+            if len(found) == len(wanted):
+                break
+        return found
+
     def online_read(
         self,
         spark: SparkSession,
@@ -311,37 +435,24 @@ class OnlineStore:
         feature_cols: list[str],
         as_of=None,
     ) -> DataFrame:
-        """J4 — multiget as a broadcast semi-join of request keys against
-        the KV table (feature_store.py:568-587).  Returns one row per
-        request row with NULL features on miss, plus ``__found``.
+        """J4 — the DataFrame multiget, for callers whose request keys
+        live in a (possibly distributed) DataFrame: a broadcast
+        semi-join of the request keys against the KV table
+        (feature_store.py:568-587).  Returns one row per request row
+        with NULL features on miss, plus ``__found``.
+        ``get_online_features`` does not come through here — its
+        request rows already live on the driver, so it calls
+        :meth:`online_get`, which launches no Spark job.
 
-        ``as_of`` (datetime, naive = UTC; or an int commit seq) serves
-        the read from the snapshot that was current THEN — what did we
-        serve this entity yesterday 14:00? — resolved through the
-        manifest commit log (``io/manifest.path_as_of``); snapshots
-        older than the ``keep_versions`` GC window raise with the
-        surviving range.  Degradation matches the head path's: a view
-        NEVER materialized serves NOT_FOUND rows (it would have then,
-        too), and a feature column added after the replayed instant
-        serves NULL (serving then had no such column) — only an
+        ``as_of`` (datetime, naive = UTC; an int commit seq; or a tag
+        name) serves the read from the snapshot that was current THEN —
+        what did we serve this entity yesterday 14:00? — see
+        :meth:`_snapshot_path`.  Degradation matches the head path's: a
+        view NEVER materialized serves NOT_FOUND rows (it would have
+        then, too), and a feature column added after the replayed
+        instant serves NULL (serving then had no such column) — only an
         actually-expired snapshot errors."""
-        if as_of is not None:
-            table_dir = self._table_dir(project, view_name)
-            if as_of == 0:
-                # seq 0 = "before the first commit" (numbering starts
-                # at 1): the pre-history replay a provenance record
-                # pins for a view that was never materialized when the
-                # snapshot was taken (provenance.NEVER_MATERIALIZED) —
-                # serving then returned NOT_FOUND rows, so replay does
-                path = None
-            elif not self.fs.exists(posixpath.join(table_dir, MANIFEST)):
-                # never committed: the head path serves NOT_FOUND rows
-                # for this state, and so did serving at the instant
-                path = None
-            else:
-                path = self._mtable(table_dir).path_as_of(as_of)
-        else:
-            path = self._current_data_path(project, view_name)
+        path = self._snapshot_path(project, view_name, as_of)
         # Materialize the request frame ONCE as a LocalRelation: the
         # multiget contract already bounds it (the whole frame is
         # broadcast below), and the plan evaluates it twice (the
